@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.FactDb
+import graft.core.{FactDb, Fixpoint}
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -140,11 +140,12 @@ object GraphOps {
   }
 
   /** Multi-hop BFS: nodes reachable from `sources` in <= maxHops
-    * directed hops, with minimal hop count. Semi-naive iteration —
-    * each round joins only the frontier against the edge set, so the
-    * work per round is O(frontier ⋈ edges), not O(visited ⋈ edges).
-    * localCheckpoint keeps the lineage flat (mandatory for iterative
-    * DataFrame algorithms at scale).
+    * directed hops, with minimal hop count. Semi-naive iteration
+    * ([[graft.core.Fixpoint]]) — each round joins only the frontier
+    * against the edge set, so the work per round is
+    * O(frontier ⋈ edges), not O(visited ⋈ edges); one fused
+    * checkpoint-and-count job per hop keeps the lineage flat. Reaching
+    * `maxHops` is not an error: the reach found so far is returned.
     */
   def bfs(edgeDf: DataFrame, sources: Seq[Long], maxHops: Int,
           materializeEdges: Boolean = true)
@@ -155,31 +156,15 @@ object GraphOps {
     // cheap pruned scan (e.g. label directories of the bucketed fact
     // log): re-reading per hop then beats paying one full
     // materialization up front.
-    // One materializing job per hop: only the FRONTIER is checkpointed
-    // (needed for the emptiness count anyway); the visited set stays a
-    // union tree of checkpointed frontiers, never re-materialized
-    // (same restructure as the datalog rule fixpoint).
-    val edges = if (materializeEdges) edgeDf.localCheckpoint(true) else edgeDf
-    // checkpoint+count fused into ONE job per round (r16,
-    // Bridge.localCheckpointCount): the separate count() action doubled
-    // the per-round job count of a latency-bound loop
-    var (frontier, n) = Bridge.localCheckpointCount(
-      sources.toDF("node").withColumn("hops", lit(0)))
-    val parts = collection.mutable.ArrayBuffer(frontier)
-    var visited = frontier
-    var hop = 0
-    while (hop < maxHops && n > 0) {
-      hop += 1
-      val next = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node"), lit(hop).as("hops"))
-        .distinct()
-      val (ck, cnt) = Bridge.localCheckpointCount(
-        next.join(visited.select("node"), Seq("node"), "left_anti"))
-      frontier = ck
-      n = cnt
-      if (n > 0) { parts += frontier; visited = parts.reduce(_ unionAll _) }
+    Fixpoint.withInputs(if (materializeEdges) Seq(edgeDf) else Nil) { mats =>
+      val edges = mats.headOption.getOrElse(edgeDf)
+      Fixpoint.semiNaive("bfs", sources.toDF("node").withColumn("hops", lit(0)),
+          Seq("node"), maxHops, bounded = true) { r =>
+        r.delta.join(edges, r.delta("node") === edges("src"))
+          .select(col("dst").as("node"), lit(r.index).as("hops"))
+          .distinct()
+      }
     }
-    visited
   }
 
   /** Time-respecting reachability (TeGraph-style): over temporal edges
@@ -203,33 +188,24 @@ object GraphOps {
     // query never read). Left lazy, each hop's frontier⋈edges is a
     // 3-way join Catalyst reorders frontier-first, so only
     // frontier-adjacent bands ever compute.
-    // One checkpoint per hop (the frontier); the best-arrival set is a
-    // union tree of frontiers resolved by a final groupBy-min, so the
-    // accumulated state is never re-materialized during iteration.
-    val edges = if (materializeEdges) tEdges.localCheckpoint(true) else tEdges
-    // one fused checkpoint+count job per round (r16, cf. bfs)
-    var (frontier, n) = Bridge.localCheckpointCount(
-      sources.toDF("node").withColumn("arrival", lit(Long.MinValue)))
-    val parts = collection.mutable.ArrayBuffer(frontier)
-    var hop = 0
-    while (hop < maxHops && n > 0) {
-      hop += 1
-      val bestSoFar = parts.reduce(_ unionAll _)
-        .groupBy(col("node")).agg(min(col("arrival")).as("old"))
-      val expanded = frontier.join(edges, frontier("node") === edges("src") &&
-          edges("t") > frontier("arrival"))
-        .groupBy(col("dst").as("node")).agg(min(col("t")).as("arrival"))
-      // keep only strict improvements
-      val (ck, cnt) = Bridge.localCheckpointCount(
-        expanded.join(bestSoFar, Seq("node"), "left")
+    // The best-arrival set is the fixpoint's union tree of frontiers,
+    // resolved by a final groupBy-min, so the accumulated state is
+    // never re-materialized during iteration.
+    Fixpoint.withInputs(if (materializeEdges) Seq(tEdges) else Nil) { mats =>
+      val edges = mats.headOption.getOrElse(tEdges)
+      Fixpoint.semiNaive("temporalReach",
+          sources.toDF("node").withColumn("arrival", lit(Long.MinValue)),
+          Seq("node", "arrival"), maxHops, bounded = true) { r =>
+        val bestSoFar = r.total.groupBy(col("node")).agg(min(col("arrival")).as("old"))
+        // keep only strict improvements
+        r.delta.join(edges, r.delta("node") === edges("src") &&
+            edges("t") > r.delta("arrival"))
+          .groupBy(col("dst").as("node")).agg(min(col("t")).as("arrival"))
+          .join(bestSoFar, Seq("node"), "left")
           .filter(col("old").isNull || col("arrival") < col("old"))
-          .select("node", "arrival"))
-      frontier = ck
-      n = cnt
-      if (n > 0) parts += frontier
+          .select("node", "arrival")
+      }.groupBy(col("node")).agg(min(col("arrival")).as("arrival"))
     }
-    parts.reduce(_ unionAll _)
-      .groupBy(col("node")).agg(min(col("arrival")).as("arrival"))
   }
 
   /** GraphX view of an edge DataFrame (undirected algorithms pass
@@ -255,9 +231,9 @@ object GraphOps {
     * groupBy/join shuffles that stay inside Tungsten codegen and AQE
     * (skew-join splitting, runtime partition coalescing), where
     * GraphX's RDD Pregel leaves both behind and iterates O(diameter)
-    * times. Same one-materializing-job-per-round structure as [[bfs]]:
-    * only the current edge set is checkpointed; the convergence check
-    * is an anti-join count on the just-checkpointed rounds. */
+    * times. Rounds run through `Fixpoint.iterate`: only the current
+    * edge set is checkpointed (and the superseded one released); the
+    * convergence check is an anti-join on the just-checkpointed rounds. */
   def ccDataFrame(edgeDf: DataFrame, maxIter: Int = 50)
                  (implicit spark: SparkSession): DataFrame = {
     val input = edgeDf.select(col("src").cast("long").as("u"),
@@ -267,11 +243,7 @@ object GraphOps {
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .distinct()
-    var (edges, prevCount) = Bridge.localCheckpointCount(canon(input))
-    var converged = prevCount == 0
-    var i = 0
-    while (!converged && i < maxIter) {
-      i += 1
+    val (edges, _) = Fixpoint.iterate("ccDataFrame", canon(input), maxIter) { edges =>
       // large-star: every neighbor v > u links to u's neighborhood min
       val nbrs = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
       val mins = nbrs.groupBy("u").agg(min(col("v")).as("mn"))
@@ -281,22 +253,14 @@ object GraphOps {
       // small-star: all smaller neighbors (and u itself) link to the min
       val sCanon = canon(large)
       val smins = sCanon.groupBy("u").agg(min(col("v")).as("m"))
-      val small = sCanon.join(smins, "u")
+      canon(sCanon.join(smins, "u")
         .select(col("v").as("u"), col("m").as("v"))
-        .unionAll(smins.select(col("u"), col("m").as("v")))
-      val (next, nextCount) = Bridge.localCheckpointCount(canon(small))
+        .unionAll(smins.select(col("u"), col("m").as("v"))))
+    } { (prev, prevCount, next, nextCount) =>
       // star-contraction is monotone: the canonical edge set is stable
       // iff sizes match and nothing left the old set
-      converged = nextCount == prevCount &&
-        edges.join(next, Seq("u", "v"), "left_anti").isEmpty
-      // superseded round's edge checkpoint released (the convergence
-      // anti-join above was its last reader) — without this, O(log n)
-      // corpus-sized copies pin the block store per cc call
-      Bridge.freeCheckpoint(edges)
-      edges = next
-      prevCount = nextCount
+      nextCount == prevCount && prev.join(next, Seq("u", "v"), "left_anti").isEmpty
     }
-    require(converged, s"ccDataFrame did not converge in $maxIter rounds")
     // at convergence the edge set is a forest of stars (member -> root)
     val nodes = input.select(col("u").as("node"))
       .unionAll(input.select(col("v").as("node"))).distinct()
@@ -321,31 +285,22 @@ object GraphOps {
   def kCore(edgeDf: DataFrame, k: Int, maxIter: Int = 50)
            (implicit spark: SparkSession): DataFrame = {
     // canonical undirected, self-loops dropped, parallel edges merged
-    var (edges, prev) = Bridge.localCheckpointCount(
-      edgeDf.select(col("src").cast("long").as("u"),
-          col("dst").cast("long").as("v"))
-        .filter(col("u") =!= col("v"))
-        .select(greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-        .distinct())
-    var done = prev == 0
-    var i = 0
-    while (!done && i < maxIter) {
-      i += 1
+    val canon = edgeDf.select(col("src").cast("long").as("u"),
+        col("dst").cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+      .select(greatest(col("u"), col("v")).as("u"),
+        least(col("u"), col("v")).as("v"))
+      .distinct()
+    val (edges, _) = Fixpoint.iterate("kCore", canon, maxIter) { edges =>
       val deg = edges.select(col("u").as("node"))
         .unionAll(edges.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("node")
-      val (next, n) = Bridge.localCheckpointCount(edges
+      edges
         .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .select("u", "v"))
-      done = n == prev
-      Bridge.freeCheckpoint(edges) // superseded peel round
-      edges = next
-      prev = n
-    }
-    require(done, s"kCore did not converge in $maxIter rounds")
+        .select("u", "v")
+    } { (_, prev, _, n) => n == prev }
     edges.select(col("u").as("node"))
       .unionAll(edges.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -358,26 +313,14 @@ object GraphOps {
   def transitiveClosure(edgeDf: DataFrame, maxIter: Int = 50)
                        (implicit spark: SparkSession): DataFrame = {
     val edges = edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-    var delta = edges
-    var dn = 1L // edges is non-empty or the loop is a no-op either way
-    val parts = collection.mutable.ArrayBuffer(delta)
-    def total = parts.reduce(_ unionAll _)
-    val e2 = edges.select(col("src").as("mid"), col("dst").as("to"))
-    var i = 0
-    while (dn > 0 && i < maxIter) {
-      i += 1
-      val next = delta.join(e2, delta("dst") === e2("mid"))
-        .select(delta("src"), e2("to").as("dst")).distinct()
-      val (ck, cnt) = Bridge.localCheckpointCount(
-        next.join(total, Seq("src", "dst"), "left_anti"))
-      delta = ck
-      dn = cnt
-      if (dn > 0) parts += delta
+      .filter(col("src") =!= col("dst")).distinct()
+    // the seed (the checkpointed edge set) is round 0's delta; deltas
+    // are disjoint and distinct, so the total needs no final dedup
+    Fixpoint.semiNaive("transitiveClosure", edges, Seq("src", "dst"), maxIter) { r =>
+      val e2 = r.seed.select(col("src").as("mid"), col("dst").as("to"))
+      r.delta.join(e2, r.delta("dst") === e2("mid"))
+        .select(r.delta("src"), e2("to").as("dst")).distinct()
     }
-    require(i < maxIter || dn == 0,
-      s"transitiveClosure did not converge in $maxIter rounds")
-    total.distinct()
   }
 
   /** INCREMENTAL transitive-closure maintenance: given the closure C of
@@ -405,8 +348,9 @@ object GraphOps {
     // otherwise share expression ids and trip Union constraint rewrites
     def fresh(df: DataFrame): DataFrame =
       df.select(col("src").as("src"), col("dst").as("dst"))
+    // the old closure is checkpointed once: it is part of the result
     val c = closure.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
+      col("dst").cast("long").as("dst")).localCheckpoint(true)
     val d = newEdges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
@@ -421,27 +365,17 @@ object GraphOps {
           .select(col("l.src").as("src"), col("c2.dst").as("dst")))
       .distinct()
       .join(c, Seq("src", "dst"), "left_anti")
-      .localCheckpoint(true)
-    val parts = collection.mutable.ArrayBuffer(c.localCheckpoint(true))
-    def total = parts.map(fresh).reduce(_ unionAll _)
-    var delta = n0
-    var dn = if (n0.isEmpty) 0L else 1L
-    // stitch step reuses the one-new-edge paths; renamed columns keep
-    // the round-1 self-join (delta IS n0) unambiguous
-    val n0k = n0.select(col("src").as("b_src"), col("dst").as("b_dst"))
-    var i = 0
-    while (dn > 0 && i < maxIter) {
-      i += 1
-      parts += delta
-      val next = delta.join(n0k, col("dst") === col("b_src"))
+    // N₀ seeds the fixpoint; each round stitches one more N₀ segment
+    // and drops pairs the old closure already holds (the fixpoint
+    // itself drops pairs it derived before). Renamed columns keep the
+    // round-1 self-join (the delta IS the seed) unambiguous.
+    val grown = Fixpoint.semiNaive("closureDelta", n0, Seq("src", "dst"), maxIter) { r =>
+      val n0k = r.seed.select(col("src").as("b_src"), col("dst").as("b_dst"))
+      r.delta.join(n0k, col("dst") === col("b_src"))
         .select(col("src"), col("b_dst").as("dst")).distinct()
-      val (ck, cnt) = Bridge.localCheckpointCount(
-        next.join(total, Seq("src", "dst"), "left_anti"))
-      delta = ck
-      dn = cnt
+        .join(c, Seq("src", "dst"), "left_anti")
     }
-    require(dn == 0, s"closureDelta did not converge in $maxIter rounds")
-    total.distinct()
+    fresh(c).unionAll(fresh(grown)).distinct()
   }
 
   /** Strongly connected components of a DIRECTED edge set, fully
@@ -453,10 +387,12 @@ object GraphOps {
     *
     * Per outer round:
     *  1. TRIM — nodes with no incoming or no outgoing edge in the
-    *     remaining subgraph are singleton SCCs; peeled iteratively
-    *     (two semi-joins per peel). On real graphs (web/ref graphs)
-    *     this removes the vast majority of nodes before any fixpoint
-    *     work — the standard FW-BW preprocessing.
+    *     remaining subgraph are singleton SCCs; their edges are peeled
+    *     iteratively (two semi-joins per peel) until the edge set is
+    *     stable. On real graphs (web/ref graphs) this removes the vast
+    *     majority of nodes before any fixpoint work — the standard
+    *     FW-BW preprocessing. Nodes no round assigns keep themselves
+    *     as their SCC.
     *  2. COLOR — forward min-label fixpoint: color(v) = min node id
     *     that reaches v. Semi-naive: only improved labels join edges
     *     next round (frontier discipline shared with [[bfs]]).
@@ -475,45 +411,24 @@ object GraphOps {
           smallGraphEdges: Long = 1L << 16)
          (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    var edges = edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-    var nodes = edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node"))).distinct().localCheckpoint(true)
+    val input = edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src") =!= col("dst")).distinct()
+    // members of the non-trivial SCCs found so far
     val assigned = collection.mutable.ArrayBuffer.empty[DataFrame]
+    var edges = input // the graph left for the next outer round
+    var core: Option[DataFrame] = None // the checkpoint `edges` reads
     var outer = 0
-    var remaining = nodes.count()
-    var dispatchedLocal = false
-    while (remaining > 0 && outer < maxOuter && !dispatchedLocal) {
+    var done = false
+    while (!done && outer < maxOuter) {
       outer += 1
-      // 1. trim: peel trivial SCCs until every node is on a cycle-able
-      // position (has both in- and out-edges in the remaining graph)
-      var trimming = true
-      var it = 0
-      while (trimming && it < maxIter) {
-        it += 1
-        val nontrivial = nodes
-          .join(edges.select(col("src").as("node")).distinct(), Seq("node"), "left_semi")
-          .join(edges.select(col("dst").as("node")).distinct(), Seq("node"), "left_semi")
-          .localCheckpoint(true)
-        // fused checkpoint+count (r16): the separate isEmpty probe and
-        // the assigned-frame checkpoint were two more jobs per peel
-        val (trivial, tn) = Bridge.localCheckpointCount(
-          nodes.join(nontrivial, Seq("node"), "left_anti"))
-        if (tn == 0) { trimming = false; Bridge.freeCheckpoint(nontrivial) }
-        else {
-          assigned += trivial.select(col("node"), col("node").as("scc"))
-          val (pn, pe) = (nodes, edges)
-          nodes = nontrivial
-          edges = edges
-            .join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-            .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-            .localCheckpoint(true)
-          // superseded peel round (its successors above are materialized)
-          Bridge.freeCheckpoint(pn); Bridge.freeCheckpoint(pe)
-        }
-      }
-      require(it < maxIter, s"scc trim did not converge in $maxIter peels")
-      remaining = nodes.count()
+      // 1. trim: keep only edges whose source has an in-edge and whose
+      // target has an out-edge, until the edge set is stable
+      val (trimmed, coreEdges) = Fixpoint.iterate("scc trim", edges, maxIter) { e =>
+        e.join(e.select(col("dst").as("src")).distinct(), Seq("src"), "left_semi")
+          .join(e.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi")
+      } { (_, prev, _, n) => n == prev }
+      core.foreach(Bridge.freeCheckpoint) // the trim materialized its own copy
+      core = Some(trimmed)
       // Adaptive dispatch (the pageRankAuto discipline): trim is the
       // DISTRIBUTED bulk-reduction — on real ref/web graphs it removes
       // the overwhelmingly-trivial majority at any scale. What remains
@@ -524,25 +439,26 @@ object GraphOps {
       // exact, deterministic, and bounded by `smallGraphEdges`.
       // Larger cores run the distributed coloring path (the 100× path;
       // parity between the two is spec-pinned).
-      if (remaining > 0 && isSmallGraph(edges, smallGraphEdges)) {
-        val local = sccLocal(edges.as[(Long, Long)].collect().toSeq)
-        assigned += local.toDF("node", "scc")
-        remaining = 0
-        dispatchedLocal = true
-      } else if (remaining > 0) {
+      if (coreEdges == 0) done = true
+      else if (coreEdges <= smallGraphEdges) {
+        assigned += sccLocal(trimmed.as[(Long, Long)].collect().toSeq).toDF("node", "scc")
+        done = true
+      } else {
         // 2. color: forward min-label fixpoint, improvements-only frontier
-        var colors = nodes.select(col("node"), col("node").as("color")).localCheckpoint(true)
+        var colors = trimmed.select(col("src").as("node")).distinct()
+          .select(col("node"), col("node").as("color")).localCheckpoint(true)
         var frontier = colors
-        it = 0
-        var fn = 1L // root colors are non-empty when remaining > 0
+        var it = 0
+        var fn = 1L // root colors are non-empty when the core is
         while (fn > 0 && it < maxIter) {
           it += 1
-          val cand = frontier.join(edges, frontier("node") === edges("src"))
+          val cand = frontier.join(trimmed, frontier("node") === trimmed("src"))
             .groupBy(col("dst").as("node")).agg(min(col("color")).as("cand"))
           val (improved, imn) = Bridge.localCheckpointCount(
             cand.join(colors, Seq("node"))
               .filter(col("cand") < col("color"))
               .select(col("node"), col("cand").as("color")))
+          if (frontier ne colors) Bridge.freeCheckpoint(frontier) // consumed
           fn = imn
           if (fn > 0) {
             val prev = colors
@@ -553,50 +469,39 @@ object GraphOps {
           }
           frontier = improved
         }
-        require(it < maxIter, s"scc coloring did not converge in $maxIter rounds")
+        if (frontier ne colors) Bridge.freeCheckpoint(frontier)
+        if (fn > 0) throw new Fixpoint.NotConverged("scc coloring", maxIter)
         // 3. collect: backward BFS from the color roots inside each color
         // class; the reached set IS the root's SCC
-        val cEdges = edges
+        val classEdges = trimmed
           .join(colors.select(col("node").as("src"), col("color").as("sc")), Seq("src"))
           .join(colors.select(col("node").as("dst"), col("color").as("dc")), Seq("dst"))
           .filter(col("sc") === col("dc"))
-          .select(col("src"), col("dst"), col("sc").as("color")).localCheckpoint(true)
-        var reach = colors.filter(col("node") === col("color")).localCheckpoint(true)
-        Bridge.freeCheckpoint(colors) // cEdges + root set are materialized
-        var bfsFrontier = reach
-        var bn = 1L // the root set is non-empty when remaining > 0
-        it = 0
-        while (bn > 0 && it < maxIter) {
-          it += 1
-          val pred = bfsFrontier.join(cEdges,
-              bfsFrontier("node") === cEdges("dst") && bfsFrontier("color") === cEdges("color"))
-            .select(cEdges("src").as("node"), bfsFrontier("color").as("color")).distinct()
-          val (bf, bfc) = Bridge.localCheckpointCount(
-            pred.join(reach, Seq("node"), "left_anti"))
-          bfsFrontier = bf
-          bn = bfc
-          if (bn > 0) {
-            val prev = reach
-            reach = reach.unionAll(bfsFrontier).localCheckpoint(true)
-            Bridge.freeCheckpoint(prev) // superseded reached set
+          .select(col("src"), col("dst"), col("sc").as("color"))
+        val reach = Fixpoint.withInputs(Seq(classEdges)) { case Seq(cEdges) =>
+          Fixpoint.semiNaive("scc collection", colors.filter(col("node") === col("color")),
+              Seq("node"), maxIter) { r =>
+            r.delta.join(cEdges,
+                r.delta("node") === cEdges("dst") && r.delta("color") === cEdges("color"))
+              .select(cEdges("src").as("node"), r.delta("color").as("color")).distinct()
           }
         }
-        require(it < maxIter, s"scc collection did not converge in $maxIter hops")
-        Bridge.freeCheckpoint(cEdges) // collect BFS done with it
+        Bridge.freeCheckpoint(colors)
         assigned += reach.select(col("node"), col("color").as("scc"))
-        val (pn, pe) = (nodes, edges)
-        nodes = nodes.join(reach, Seq("node"), "left_anti").localCheckpoint(true)
-        edges = edges
-          .join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          .localCheckpoint(true)
-        Bridge.freeCheckpoint(pn); Bridge.freeCheckpoint(pe)
-        remaining = nodes.count()
+        // collected SCCs leave the graph
+        val gone = reach.select("node")
+        edges = trimmed
+          .join(gone.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
+          .join(gone.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
       }
     }
-    require(remaining == 0, s"scc did not converge in $maxOuter outer rounds")
+    core.foreach(Bridge.freeCheckpoint)
+    if (!done) throw new Fixpoint.NotConverged("scc", maxOuter)
+    val nodes = input.select(col("src").as("node"))
+      .unionAll(input.select(col("dst").as("node"))).distinct()
     if (assigned.isEmpty) nodes.select(col("node"), col("node").as("scc"))
-    else assigned.reduce(_ unionAll _)
+    else nodes.join(assigned.reduce(_ unionAll _), Seq("node"), "left")
+      .select(col("node"), coalesce(col("scc"), col("node")).as("scc"))
   }
 
   /** Iterative (explicit-stack) Tarjan over a driver-local edge list —

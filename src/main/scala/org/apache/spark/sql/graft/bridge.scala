@@ -52,24 +52,32 @@ object Bridge {
 
   /** Eager localCheckpoint that RETURNS the materialized row count.
     * `Dataset.localCheckpoint(true)` already runs one materializing job
-    * (an internal count) and discards the result, so an iterative loop
-    * that needs a per-round emptiness/progress test pays a SECOND job
-    * for it (`count()`/`isEmpty`) — at local job-latency scale that is
-    * the dominant cost of the latency-bound graph loops (r16). This
-    * mirrors the Dataset.checkpoint internals: copy rows (the scan
-    * reuses UnsafeRow buffers), localCheckpoint the RDD, count to
-    * materialize, rebuild a DataFrame over the checkpointed RDD.
-    * Identical storage/release semantics to Dataset.localCheckpoint:
-    * the RDD registers in getPersistentRDDs (harness sweeps see it)
-    * and [[freeCheckpoint]] releases it. */
+    * and discards its result, so an iterative loop that needs a
+    * per-round emptiness/progress test pays a SECOND job for it
+    * (`count()`/`isEmpty`) — at local job-latency scale that is the
+    * dominant cost of the latency-bound loops (`graft.core.Fixpoint`).
+    * This mirrors the Dataset.localCheckpoint internals: copy rows (the
+    * scan reuses UnsafeRow buffers), localCheckpoint the RDD, count to
+    * materialize, and wrap the RDD with `LogicalRDD.fromDataset`, which
+    * keeps the executed plan's outputPartitioning/outputOrdering and
+    * the optimized plan's statistics, exactly as Dataset.localCheckpoint
+    * does. Under AQE the executed plan's root is the adaptive wrapper,
+    * which reports UnknownPartitioning, so there (as with
+    * Dataset.localCheckpoint) only the statistics carry over. Reporting
+    * the adaptive FINAL plan's coalesced partitioning instead was
+    * measured on the latency-bound graph loops (ccDataFrame on a
+    * 45-node forest, local[4]: 32 → 47 jobs per call), so it is not
+    * done. Identical storage/release
+    * semantics to Dataset.localCheckpoint: the RDD registers in
+    * getPersistentRDDs and [[freeCheckpoint]] releases it. */
   def localCheckpointCount(df: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Long) = {
-    val spark = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val internal = df.queryExecution.toRdd.map(_.copy())
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val internal = ds.queryExecution.toRdd.map(_.copy())
     internal.localCheckpoint()
     val n = internal.count()
-    (spark.internalCreateDataFrame(internal, df.schema, isStreaming = false), n)
+    (org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(internal, ds, isStreaming = false)), n)
   }
 
   /** Release the materialized RDD blocks behind a (local)checkpointed

@@ -291,18 +291,44 @@ class CompilerSpec extends SparkSpec {
 
   test("mutual recursion rejects non-stratified negation with a clear error") {
     val db = Compiler.Db(graft.core.TestData.eventsDb(spark, "/root/testdata/sf0.001"))
-    val err = intercept[IllegalArgumentException] {
-      Compiler.run(db, Query(
-        find = Seq(FVar(V("x"), "x"), FVar(V("y"), "y")),
-        where = RuleApp("a", V("x"), V("y")),
-        rules = Seq(
-          Rule("a", Seq(V("p"), V("q")), Pattern(V("p"), C("last_value"), V("q"))),
-          Rule("a", Seq(V("p"), V("q")), And(
-            RuleApp("b", V("p"), V("q")),
-            Not(RuleApp("b", V("q"), V("p"))))),
-          Rule("b", Seq(V("p"), V("q")), RuleApp("a", V("p"), V("q"))))))(spark)
+    val base = Rule("a", Seq(V("p"), V("q")), Pattern(V("p"), C("last_value"), V("q")))
+    val mutual = Seq(base,
+      Rule("a", Seq(V("p"), V("q")), And(
+        RuleApp("b", V("p"), V("q")),
+        Not(RuleApp("b", V("q"), V("p"))))),
+      Rule("b", Seq(V("p"), V("q")), RuleApp("a", V("p"), V("q"))))
+    // a self-recursive rule negating itself is a recursion group of one
+    val self = Seq(base,
+      Rule("a", Seq(V("p"), V("q")), And(
+        Pattern(V("p"), C("last_value"), V("q")),
+        Not(RuleApp("a", V("q"), V("p"))))))
+    for (rules <- Seq(mutual, self)) {
+      val err = intercept[IllegalArgumentException] {
+        Compiler.run(db, Query(
+          find = Seq(FVar(V("x"), "x"), FVar(V("y"), "y")),
+          where = RuleApp("a", V("x"), V("y")),
+          rules = rules))(spark)
+      }
+      assert(err.getMessage.contains("non-stratified negation"))
     }
-    assert(err.getMessage.contains("non-stratified negation"))
+  }
+
+  test("non-linear recursion: tc(x,y) :- tc(x,m), tc(m,y) derives every path") {
+    // chain 1→2→3→4→5: binding BOTH self-references to the last delta
+    // misses pairs whose halves were derived in different rounds, e.g.
+    // (1,4) = (1,2)∘(2,4) and (2,5) = (2,3)∘(3,5)
+    val chain = mkDb((1L to 4L).map(i => r(60 + i, "link", 60 + i + 1)),
+      Map("link" -> "vref"))
+    val out = Compiler.run(chain, Query(
+      find = Seq(FVar(V("a"), "a"), FVar(V("b"), "b")),
+      where = RuleApp("tc", V("a"), V("b")),
+      rules = Seq(
+        Rule("tc", Seq(V("x"), V("y")), Pattern(V("x"), C("link"), V("y"))),
+        Rule("tc", Seq(V("x"), V("y")), And(
+          RuleApp("tc", V("x"), V("m")),
+          RuleApp("tc", V("m"), V("y")))))))
+      .collect().map(row => (row.getLong(0) - 60, row.getLong(1) - 60)).toSet
+    assert(out === (for (i <- 1L to 5L; j <- i + 1 to 5L) yield (i, j)).toSet)
   }
 
   test("recursive rule terminates on a cyclic graph (closure of a 3-cycle)") {

@@ -795,4 +795,35 @@ class PlanAuditSpec extends SparkSpec {
     assert("partial_sum".r.findFirstIn(p).isDefined,
       s"expected map-side partial sums:\n$p")
   }
+
+  test("localCheckpointCount keeps hash partitioning: no exchange above the checkpoint scan") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.{col, sum}
+    // the fixpoint loops checkpoint every delta through this call; a
+    // scan reporting UnknownPartitioning makes every keyed consumer
+    // re-shuffle a frame that is already partitioned by key. The
+    // partitioning comes off the executed plan, as Dataset.localCheckpoint
+    // takes it; under AQE that plan's root is the adaptive wrapper,
+    // which reports none, so the static planner is pinned here.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val keyed = spark.range(1000)
+        .select((col("id") % 7).as("k"), col("id").as("v"))
+        .repartition(col("k"))
+      val (ck, n) = org.apache.spark.sql.graft.Bridge.localCheckpointCount(keyed)
+      try {
+        assert(n === 1000)
+        val agg = ck.groupBy("k").agg(sum("v"))
+        assert(agg.collect().map(_.getLong(1)).sum === (0L until 1000L).sum)
+        val plan = agg.queryExecution.executedPlan
+        assert(plan.collect { case s: RDDScanExec => s }.nonEmpty,
+          s"expected the checkpoint scan:\n$plan")
+        val above = plan.collect {
+          case sh: ShuffleExchangeExec if sh.collect { case s: RDDScanExec => s }.nonEmpty => sh
+        }
+        assert(above.isEmpty, s"exchange re-inserted above the checkpoint scan:\n$plan")
+      } finally org.apache.spark.sql.graft.Bridge.freeCheckpoint(ck)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
 }
