@@ -27,8 +27,13 @@ final class Graft private (val session: Transactor.Session,
 
   /** Current database value (immutable snapshot semantics: queries on a
     * Graft handle see facts as of its tx bound, like the reference's
-    * db-as-value). Cardinality honors schema facts. */
-  def db: FactDb = Schema.applySchema(session.db, asOfTx)
+    * db-as-value). Cardinality honors schema facts, resolved as of the
+    * handle's tx from the session's schema-fact list — no Spark job
+    * once the session holds that list. */
+  def db: FactDb = {
+    val (log, schemaFacts) = session.dbWithSchemaFacts
+    log.copy(cardMany = log.cardMany ++ Schema.resolveCardMany(schemaFacts, log, asOfTx))
+  }
 
   def transact(tx: Seq[Transactor.TxStmt]): Transactor.TxReport = session.transact(tx)
 
@@ -64,15 +69,18 @@ final class Graft private (val session: Transactor.Session,
     * runs each `(pull ?e [...])` in a :find as its OWN generated
     * sub-query and zips the resulting maps per row (reference
     * query_test.clj:566-570, query/pull.clj). Here each spec evaluates
-    * independently (one pullNested each) and equijoins back on `e`:
-    * one row per entity, one named struct column per pull. */
-  def pullMany(ids: DataFrame, specs: Seq[(String, Pull.Spec)]): DataFrame =
+    * independently (one pullNested each, all over ONE database value)
+    * and equijoins back on `e`: one row per entity, one named struct
+    * column per pull. */
+  def pullMany(ids: DataFrame, specs: Seq[(String, Pull.Spec)]): DataFrame = {
+    val current = db
     specs.foldLeft(ids) { case (acc, (name, spec)) =>
       acc.join(
-        Pull.pullNested(db, ids, spec, asOfTx)
+        Pull.pullNested(current, ids, spec, asOfTx)
           .withColumnRenamed("pulled", name),
         Seq("e"), "left")
     }
+  }
 }
 
 object Graft {

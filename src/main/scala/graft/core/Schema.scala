@@ -8,30 +8,52 @@ import org.apache.spark.sql.functions._
   *   [?e :unifydb/schema      <attr-name>]
   *   [?e :unifydb/cardinality "cardinality/many"]
   * — so schema changes are transactional and time-travel like any other
-  * fact. This derives the cardinality-many attribute set from the log
-  * (a driver-side collect of schema entities only — metadata-sized by
-  * construction, like the reference's own schema sub-query).
+  * fact. Deriving the cardinality-many set is two steps: [[facts]]
+  * collects the raw facts of the two schema attributes (one job, once
+  * per log — a connection keeps the list and extends it on transact),
+  * and [[resolveCardMany]] resolves them as of any tx in plain Scala,
+  * with no Spark job.
   */
 object Schema {
   val SchemaAttr = "unifydb/schema"
   val CardinalityAttr = "unifydb/cardinality"
   val CardinalityMany = "cardinality/many"
 
-  /** Attributes declared :cardinality/many by schema facts visible as of
-    * `asOfTx`. Reads the version-RESOLVED snapshot (not the raw log) so
-    * a retracted schema declaration stops applying — the reference
-    * resolves schema via a normal query whose process-facts filters
-    * retractions (schema.clj get-cardinalities). */
-  def cardManyAttrs(db: FactDb, asOfTx: Long = Long.MaxValue): Set[String] = {
-    val log = db.snapshot(asOfTx)
-    val schemaEnts = log.filter(col("a") === SchemaAttr)
-      .select(col("e"), col("vstr").as("attr"))
-    val manyEnts = log.filter(col("a") === CardinalityAttr &&
-        col("vstr") === CardinalityMany)
-      .select(col("e"))
-    schemaEnts.join(manyEnts, "e").select("attr")
-      .distinct().collect().map(_.getString(0)).toSet
+  /** True for the attributes [[facts]] collects. */
+  def isSchemaAttr(a: String): Boolean = a == SchemaAttr || a == CardinalityAttr
+
+  /** Every version of every schema fact in `db`'s log: a plain filter
+    * and collect (partition-pruned on the partitionBy(a) layout), no
+    * window, join or distinct. */
+  def facts(db: FactDb): Vector[LocalFacts.Fact] =
+    db.log.filter(col("a").isin(SchemaAttr, CardinalityAttr))
+      .select(col("e"), col("a"), col("vtype"), col("vstr"), col("vlong"),
+        col("vdbl"), unix_micros(col("vts")), col("vref"), col("tx"), col("added"))
+      .collect().iterator.map { r =>
+        def boxed[T](i: Int): T = r.get(i).asInstanceOf[T]
+        LocalFacts.Fact(r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
+          boxed(4), boxed(5), boxed(6), boxed(7), r.getLong(8), r.getBoolean(9))
+      }.toVector
+
+  /** Attributes declared :cardinality/many by `schemaFacts` visible as of
+    * `asOfTx`, resolved like `db.snapshot(asOfTx)` (so a retracted
+    * declaration stops applying — the reference resolves schema via a
+    * normal query whose process-facts filters retractions, schema.clj
+    * get-cardinalities): the schema names of the entities whose live
+    * cardinality is cardinality/many. */
+  def resolveCardMany(schemaFacts: Seq[LocalFacts.Fact], db: FactDb,
+                      asOfTx: Long): Set[String] = {
+    val live = LocalFacts.snapshot(schemaFacts, db, asOfTx)
+    val many = live.collect {
+      case f if f.a == CardinalityAttr && f.vstr == CardinalityMany => f.e
+    }.toSet
+    live.collect { case f if f.a == SchemaAttr && many(f.e) => f.vstr }.toSet
   }
+
+  /** Attributes declared :cardinality/many by schema facts visible as of
+    * `asOfTx`. */
+  def cardManyAttrs(db: FactDb, asOfTx: Long = Long.MaxValue): Set[String] =
+    resolveCardMany(facts(db), db, asOfTx)
 
   /** A FactDb whose cardinality handling follows its own schema facts. */
   def applySchema(db: FactDb, asOfTx: Long = Long.MaxValue): FactDb =

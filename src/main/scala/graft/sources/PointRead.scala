@@ -1,6 +1,7 @@
 package graft.sources
 
-import graft.core.FactDb
+import graft.core.{FactDb, LocalFacts}
+import graft.core.LocalFacts.Fact
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
@@ -24,7 +25,7 @@ import scala.collection.mutable.ArrayBuffer
   * an `e = eid` predicate (row-group stats + dictionary + page filtering
   * apply — the layout sorts by `e`, so the reader seeks straight to the
   * entity's pages), and run version resolution over the handful of
-  * surviving facts in plain Scala. No executor, no scheduler, no
+  * surviving facts in plain Scala ([[graft.core.LocalFacts]]). No executor, no scheduler, no
   * shuffle: milliseconds warm.
   *
   * Semantics are EXACTLY [[FactDb.entity]] (parity spec-pinned): same
@@ -35,11 +36,6 @@ import scala.collection.mutable.ArrayBuffer
   * independent of corpus size; at 100 TB this is the difference between
   * an interactive entity inspector and a batch job per click. */
 object PointRead {
-
-  private case class Fact(a: String, vtype: String, vstr: String,
-                          vlong: java.lang.Long, vdbl: java.lang.Double,
-                          vtsMicros: java.lang.Long, vref: java.lang.Long,
-                          tx: Long, added: Boolean)
 
   /** Table layout resolved ONCE per (session, table): bucket count,
     * per-bucket file lists, a reusable Hadoop conf. The catalog lookup,
@@ -127,7 +123,7 @@ object PointRead {
               if (has(f)) java.lang.Long.valueOf(g.getLong(f, 0)) else null
             def dbl(f: String): java.lang.Double =
               if (has(f)) java.lang.Double.valueOf(g.getDouble(f, 0)) else null
-            facts += Fact(
+            facts += Fact(eid,
               attrFromDir.getOrElse(str("a")), str("vtype"), str("vstr"),
               lng("vlong"), dbl("vdbl"), tsMicros(g), lng("vref"),
               g.getLong("tx", 0), g.getBoolean("added", 0))
@@ -136,7 +132,7 @@ object PointRead {
         }
       } finally reader.close()
     }
-    resolve(facts.toSeq, db, asOfTx).map(render(_, zone))
+    LocalFacts.snapshot(facts.toSeq, db, asOfTx).map(render(_, zone))
   }
 
   /** Spark's bucket function: pmod(Murmur3Hash(e, seed=42), n) —
@@ -161,68 +157,6 @@ object PointRead {
         java.lang.Long.valueOf(
           (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L)
       case _ => java.lang.Long.valueOf(g.getLong("vts", 0))
-    }
-  }
-
-  /** [[FactDb.snapshot]] + [[FactDb.entity]] semantics over an
-    * in-memory fact list: per-value liveness (tx desc, retraction wins
-    * the same-tx tie), then cardinality-one newest-per-attribute with
-    * the same value-column desc-nulls-last tie-break. */
-  private def resolve(all: Seq[Fact], db: FactDb, asOfTx: Long): Seq[Fact] = {
-    val bounded = all.filter(_.tx <= asOfTx)
-    if (!db.versioned) return bounded
-    val live = bounded
-      .groupBy(f => (f.a, f.vtype, f.vstr, f.vlong, f.vdbl, f.vtsMicros, f.vref))
-      .values.map { versions =>
-        // orderBy(tx desc, added asc): among the newest tx a retraction
-        // (added=false) outranks the assertion
-        versions.minBy(f => (-f.tx, f.added))
-      }
-      .filter(_.added).toSeq
-    val (one, many) = live.partition(f => !db.cardMany(f.a))
-    val resolvedOne = one.groupBy(_.a).values.map(_.min(cardOneOrder)).toSeq
-    resolvedOne ++ many
-  }
-
-  /** Mirror of resolveCardOne's window order: tx desc, then each value
-    * slot desc with nulls last. min() under this ordering = row_number 1.
-    * Strings compare as UTF-8 BYTES (Spark's UTF8String binary order),
-    * not Java UTF-16 code units — the two disagree for
-    * supplementary-plane characters, which would flip a same-tx
-    * card-one tie against entity(). */
-  private val utf8Order: Ordering[String] = new Ordering[String] {
-    def compare(a: String, b: String): Int = {
-      val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      val n = math.min(x.length, y.length)
-      while (i < n) {
-        val c = java.lang.Integer.compare(x(i) & 0xff, y(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      java.lang.Integer.compare(x.length, y.length)
-    }
-  }
-  private val cardOneOrder: Ordering[Fact] = new Ordering[Fact] {
-    private def descNullsLast[T](x: T, y: T)(implicit ord: Ordering[T]): Int =
-      (x == null, y == null) match {
-        case (true, true) => 0
-        case (true, false) => 1   // null sorts AFTER any value
-        case (false, true) => -1
-        case (false, false) => ord.compare(y, x) // desc
-      }
-    def compare(a: Fact, b: Fact): Int = {
-      var c = java.lang.Long.compare(b.tx, a.tx) // tx desc
-      if (c != 0) return c
-      c = descNullsLast(a.vstr, b.vstr)(utf8Order); if (c != 0) return c
-      c = descNullsLast(a.vlong, b.vlong)(Ordering.by((l: java.lang.Long) => l.longValue))
-      if (c != 0) return c
-      c = descNullsLast(a.vdbl, b.vdbl)(Ordering.by((d: java.lang.Double) => d.doubleValue))
-      if (c != 0) return c
-      c = descNullsLast(a.vtsMicros, b.vtsMicros)(Ordering.by((l: java.lang.Long) => l.longValue))
-      if (c != 0) return c
-      descNullsLast(a.vref, b.vref)(Ordering.by((l: java.lang.Long) => l.longValue))
     }
   }
 

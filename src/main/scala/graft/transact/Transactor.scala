@@ -1,6 +1,7 @@
 package graft.transact
 
-import graft.core.{FactDb, FactStore}
+import graft.core.{FactDb, FactStore, LocalFacts, Schema}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -91,11 +92,36 @@ object Transactor {
       }
   }
 
-  final class Session(val spark: SparkSession, var db: FactDb,
+  /** A connection's fact log and the schema facts collected from it
+    * (`None` until a read first asks for them). */
+  private final case class Logged(db: FactDb, schema: Option[Vector[LocalFacts.Fact]])
+
+  final class Session(val spark: SparkSession, db0: FactDb,
                       private var nextTx: Long, private var nextId: Long,
                       clock: () => Long = () => System.currentTimeMillis(),
                       transforms: Seq[Transform] = Seq(newUserTransform()),
-                      reportFilters: Seq[ReportFilter] = Seq(redactSensitive)) {
+                      reportFilters: Seq[ReportFilter] = Seq(redactSensitive),
+                      schema0: Option[Vector[LocalFacts.Fact]] = None) {
+
+    // the log and its schema facts change in ONE assignment, so a reader
+    // never pairs a new log with a stale schema list
+    @volatile private var state = Logged(db0, schema0)
+
+    def db: FactDb = state.db
+
+    /** The current log with every version of its schema facts
+      * ([[Schema.facts]]): collected once, on the first call, then kept
+      * current by [[transact]] from the batches it appends. */
+    def dbWithSchemaFacts: (FactDb, Vector[LocalFacts.Fact]) = {
+      val s = state
+      s.schema match {
+        case Some(facts) => (s.db, facts)
+        case None =>
+          val facts = Schema.facts(s.db)
+          if (state eq s) state = Logged(s.db, Some(facts))
+          (s.db, facts)
+      }
+    }
 
     private var tempCounter = 0L
     private def freshTemp(): String = { tempCounter += 1; s"graft.temp-$tempCounter" }
@@ -173,6 +199,12 @@ object Transactor {
         }
         Row(e, a, vtype, vstr, vlong, vdbl, vts, vref, tx, added)
       }
+      val schemaBatch = rows.collect { case r if Schema.isSchemaAttr(r.getString(1)) =>
+        val vtsMicros = Option(r.getAs[java.sql.Timestamp](6))
+          .map(t => java.lang.Long.valueOf(DateTimeUtils.fromJavaTimestamp(t))).orNull
+        LocalFacts.Fact(r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
+          r.getAs(4), r.getAs(5), vtsMicros, r.getAs(7), r.getLong(8), r.getBoolean(9))
+      }
       val typesSeq = facts.map { case (_, a, v, _, _) =>
         a -> (v match {
           case EntityRef(_) => "vref"
@@ -201,8 +233,11 @@ object Transactor {
       val types = typesSeq.toMap
       val batch = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), FactStore.factSchema)
-      db = FactDb(db.log.unionAll(batch), db.attrTypes ++ types, db.cardMany,
-        versioned = true)
+      val s = state
+      state = Logged(
+        FactDb(s.db.log.unionAll(batch), s.db.attrTypes ++ types, s.db.cardMany,
+          versioned = true),
+        s.schema.map(_ ++ schemaBatch))
     }
   }
 
@@ -212,7 +247,8 @@ object Transactor {
                    clock: () => Long = () => System.currentTimeMillis()): Session = {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], FactStore.factSchema)
-    new Session(spark, FactDb(empty, Map.empty), firstTx, firstEntityId, clock)
+    new Session(spark, FactDb(empty, Map.empty), firstTx, firstEntityId, clock,
+      schema0 = Some(Vector.empty))
   }
 
   /** Session over an existing db (e.g. bulk-melted base tables). */

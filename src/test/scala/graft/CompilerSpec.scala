@@ -147,26 +147,6 @@ class CompilerSpec extends SparkSpec {
     assert(out.count() === 6) // 1->2,3,4; 2->3,4; 3->4
   }
 
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // drain the async listener bus: poll until the count is stable
-    // for a full second (bounded), instead of one fixed sleep
-    try {
-      body
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 4 && waited < 15000) {
-        Thread.sleep(250); waited += 250
-        if (n.get() == last) stable += 1 else { stable = 0; last = n.get() }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    n.get()
-  }
 
   test("recursive rule relation is shared across queries: no fixpoint jobs on reuse") {
     val chain = mkDb(Seq(

@@ -220,6 +220,31 @@ class PlanAuditSpec extends SparkSpec {
       s"expected runtime reuse of the sig-grouping exchange:\n$fin")
   }
 
+  test("q_interval_coalesce / q_concurrency: AQE reuses the boundary sweep's exchanges") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // walks into adaptive query stages, not through a reused exchange
+    object aqe extends AdaptiveSparkPlanHelper
+    // the boundary relation feeds several consumers and is NOT
+    // checkpointed: runtime exchange reuse is what keeps each query at
+    // one events scan (with reuse off they scan it 4 and 2 times).
+    // Pinned: (events scans, reused exchanges); q_interval_coalesce
+    // reuses the user and day shuffles and the day-offset broadcast.
+    Seq("q_interval_coalesce" -> ((1, 3)), "q_concurrency" -> ((1, 1))).foreach {
+      case (name, (wantScans, wantReused)) =>
+        val df = SparkEntry.queries(name)(spark, sf)
+        df.collect()
+        val fin = df.queryExecution.executedPlan
+        val scans = aqe.collect(fin) { case s: FileSourceScanExec => s }.size
+        val reused = aqe.collect(fin) { case r: ReusedExchangeExec => r }.size
+        assert(fin.toString.contains("ReusedExchange") &&
+          scans === wantScans && reused === wantReused,
+          s"$name: expected $wantScans scan(s) and $wantReused reused exchange(s), " +
+            s"got $scans and $reused:\n$fin")
+    }
+  }
+
   test("minhash sidecar: a sort-merge verify join reads the buckets, shuffle-free") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

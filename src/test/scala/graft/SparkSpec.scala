@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,6 +9,22 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   implicit def sparkImplicit: SparkSession = spark
+
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    ListenerBus.drain(sc) // earlier jobs' events must not count
+    sc.addSparkListener(listener)
+    try { body; ListenerBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get()
+  }
 }
 
 object SparkSpec {
